@@ -37,7 +37,7 @@ object Plans {
     println("=== minhash LSH candidates (band bucket join; bucket-size cap before self-join) ===")
     graft.spark.TextOps.minhashPairs(spark, docs, materialize = false).explain("formatted")
 
-    println("=== persisted ANN index probe (partition-pruned (tbl,sigp) read + pushed sig filter) ===")
+    println("=== persisted ANN index probe (manifest key-range file selection + pushed sig filter) ===")
     val sfDir = "/root/testdata/sf0.001"
     val idx = graft.spark.TextOps.ensureAnnIndex(spark, sfDir)
     graft.spark.TextOps.annLshProbeScan(spark, sfDir, idx, 0L, radius = 2)

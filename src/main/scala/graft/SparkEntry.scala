@@ -1461,9 +1461,9 @@ object SparkEntry {
       TextOps.annIvfTopKEval(s, dir, m = 8, k = 5, nprobe = 6).orderBy("qid", "rank")),
 
     // persisted-index probes (the 100-TB path): build-once parquet index
-    // with (tbl, sigp) / list_id partition columns, probe = partition-pruned
-    // read of O(probes) buckets — never a corpus scan; results must equal
-    // DuckDB's brute-force top-k
+    // sorted by (tbl, sig) / list_id, probe = read of only the files whose
+    // manifest key range meets O(probes) buckets — never a corpus scan;
+    // results must equal DuckDB's brute-force top-k
     "q_ann_lsh_idx" -> ((s, dir) => {
       val idx = TextOps.ensureAnnIndex(s, dir)
       TextOps.annLshIndexed(s, dir, idx, queryId = 0L, k = 5, radius = 2)

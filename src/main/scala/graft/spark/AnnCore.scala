@@ -2,6 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 private[spark] object VecMath {
   /** squared euclidean distance over the common prefix. */
@@ -62,6 +63,39 @@ final case class TwoLevelQuantizer(coarse: Array[Array[Float]],
     scanCell(b1)
     scanCell(b2)
     best
+  }
+}
+
+/** bounded top-k of DISTINCT ids under the probes' ranking (score desc,
+  * id asc; -0.0 ties 0.0 as in Spark's ordering): a worst-first heap of k
+  * entries. A repeated id is skipped — duplicate rows are value-identical
+  * re-ingests of one vector, so the first copy's score is the score. Used
+  * per partition on executors and again on the driver to merge. */
+private[spark] final class TopK(k: Int) {
+  private val heap = new java.util.PriorityQueue[(Long, Double)](
+    math.max(1, k), (a: (Long, Double), b: (Long, Double)) => TopK.cmp(b, a))
+  private val ids = new java.util.HashSet[Long]()
+
+  def add(id: Long, score: Double): Unit =
+    if (k > 0 && !ids.contains(id)) {
+      val x = (id, score)
+      if (heap.size < k) { heap.add(x); ids.add(id) }
+      else if (TopK.cmp(x, heap.peek()) < 0) {
+        ids.remove(heap.poll()._1); heap.add(x); ids.add(id)
+      }
+    }
+
+  def result: Array[(Long, Double)] = {
+    val out = new Array[(Long, Double)](heap.size)
+    heap.toArray(out).sortWith(TopK.cmp(_, _) < 0)
+  }
+}
+
+private[spark] object TopK {
+  /** negative when `a` ranks before `b` */
+  def cmp(a: (Long, Double), b: (Long, Double)): Int = {
+    val c = if (a._2 == b._2) 0 else java.lang.Double.compare(b._2, a._2)
+    if (c != 0) c else java.lang.Long.compare(a._1, b._1)
   }
 }
 
@@ -156,15 +190,33 @@ private[spark] trait AnnCoreOps extends TextCoreOps {
     top.toSeq.zipWithIndex.map { case (id, i) => (i + 1, id) }.toDF("rank", "vec_id")
   }
 
+  /** the fixed schema every probe reads `embeddings.parquet` with: no
+    * schema-inference job, and a table of another element type (say
+    * ARRAY<DOUBLE>) fails the read loudly instead of converting. */
+  private[spark] final val QuerySchema: StructType = StructType.fromDDL("vec_id BIGINT, embedding ARRAY<FLOAT>")
+
+  /** the query vectors for `ids`, one collect (no CollectLimit ramp-up). */
+  private[spark] def queryVectors(spark: SparkSession, sfDir: String,
+      ids: Seq[Long]): Array[(Long, Array[Float])] = {
+    import spark.implicits._
+    spark.read.schema(QuerySchema).parquet(s"$sfDir/embeddings.parquet")
+      .where(col("vec_id").isin(ids: _*))
+      .select(col("vec_id").as[Long], col("embedding").as[Seq[Float]])
+      .collect().map { case (id, v) => (id, v.toArray) }
+  }
+
+  private[spark] def queryVector(spark: SparkSession, sfDir: String, id: Long): Array[Float] =
+    queryVectors(spark, sfDir, Seq(id)).headOption.map(_._2).getOrElse(
+      throw new NoSuchElementException(s"vec_id $id not in $sfDir/embeddings.parquet"))
+
   /** brute-force cosine top-k against one query vector (labeled baseline;
     * broadcast query, TakeOrdered — no driver collect of the corpus).
     * Output is rank order only: cross-engine float comparison stays out of
     * the hash-compared columns. */
   def annTopK(spark: SparkSession, sfDir: String, queryId: Long, k: Int): DataFrame = {
     import spark.implicits._
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val q = emb.where(col("vec_id") === queryId)
-      .select(col("embedding")).as[Seq[Float]].head().toArray
+    val emb = spark.read.schema(QuerySchema).parquet(s"$sfDir/embeddings.parquet")
+    val q = queryVector(spark, sfDir, queryId)
     val qb = spark.sparkContext.broadcast(q)
     val scored = emb.select(col("vec_id").as[Long], col("embedding").as[Seq[Float]])
       .map { case (id, v) => (id, cosine(qb.value, v)) }

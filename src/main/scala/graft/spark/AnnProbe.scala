@@ -1,87 +1,116 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** probes + eval harnesses against the persisted ANN index: partition-
+/** probes + eval harnesses against the persisted ANN index: key-range-
   * pruned LSH probes (single + batched), the certificate-exact IVF probe
   * with radius-aware initial list selection, and the cross-engine TopK
   * eval pair. Maintenance lifecycle lives in [[AnnIndexOps]]; see
   * [[TextOps]]. */
 private[spark] trait AnnProbeOps extends AnnIndexOps {
-  /** the LAZY scored probe scan behind [[annLshIndexed]]: reads ONLY the
-    * probed (tbl, sigp) partitions (partition pruning) and skips
-    * non-matching row groups via the pushed-down sig filter — O(tables *
-    * probes * bucket) rows, not a corpus scan. Public so plan audits
-    * (Plans.scala, TextOpsSpec) can inspect the pruned scan that
-    * [[rankTopK]]'s collect would otherwise hide behind a local relation. */
+  /** per table, the Hamming-<=radius probe set of `q`'s signature. */
+  private def lshProbes(m: AnnManifest, q: Array[Float], radius: Int): Array[Set[Int]] =
+    Array.tabulate(m.tables)(t => probeSetR(hyperplaneSig(q, m.planes, t), m.planes, radius))
+
+  /** the lsh rows in the union of `probes`' buckets: only files whose
+    * (tbl, sig) range meets a probed key are read, and the pushed-down
+    * `sig IN (...)` filter skips row groups inside them. */
+  private def lshCandidates(spark: SparkSession, indexDir: String, m: AnnManifest,
+      probes: Seq[Array[Set[Int]]]): Option[DataFrame] = {
+    val perTable = (0 until m.tables).map(t => probes.flatMap(_(t)).distinct.sorted)
+    val keys = perTable.zipWithIndex.flatMap { case (ps, t) => ps.map(lshKey(t, _)) }.toArray
+    sectionScan(spark, indexDir, m, "lsh", keys).map(_.where(perTable.zipWithIndex
+      .map { case (ps, t) => col("tbl") === t && col("sig").isin(ps: _*) }.reduce(_ || _)))
+  }
+
+  /** exact top-k by cosine to `q` over (vec_id, embedding) rows in ONE job
+    * and no shuffle: each partition keeps its k best distinct ids, the
+    * driver merges (duplicates across batches dedup on vec_id). */
+  private def topKScan(df: Option[DataFrame], q: Array[Float], k: Int): Array[(Long, Double)] = {
+    val top = new TopK(k)
+    df.foreach { d =>
+      import d.sparkSession.implicits._
+      d.select(col("vec_id").as[Long], col("embedding").as[Seq[Float]])
+        .mapPartitions { it =>
+          val part = new TopK(k)
+          it.foreach { case (id, v) => part.add(id, cosine(q, v)) }
+          part.result.iterator
+        }.collect().foreach { case (id, c) => top.add(id, c) }
+    }
+    top.result
+  }
+
+  /** the LAZY scored probe scan behind [[annLshIndexed]] against the current
+    * manifest: reads ONLY the files whose key range meets the probed
+    * buckets, with the sig filter pushed down — O(tables * probes *
+    * bucket) rows, not a corpus scan. Public so plan audits (Plans.scala,
+    * TextOpsSpec) can inspect the pruned scan. */
   def annLshProbeScan(spark: SparkSession, sfDir: String, indexDir: String,
       queryId: Long, radius: Int = 1): DataFrame = {
     import spark.implicits._
-    val (planes, tables, _, _, _) = readMeta(spark, indexDir)
-    val q = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .where(col("vec_id") === queryId)
-      .select(col("embedding")).as[Seq[Float]].head().toArray
-    val qb = spark.sparkContext.broadcast(q)
-    val shift = math.max(0, planes - 8)
-    // one disjunct per table: tbl = t AND sigp IN (prefixes) AND sig IN (probes)
-    val perTable = (0 until tables).map { t =>
-      val probes = probeSetR(hyperplaneSig(q, planes, t), planes, radius).toSeq
-      val prefixes = probes.map(_ >>> shift).distinct
-      col("tbl") === t && col("sigp").isin(prefixes: _*) && col("sig").isin(probes: _*)
-    }
-    // ignoreMissingFiles (set in indexFrame): a concurrent compaction's
-    // cleanup step may delete an old batch file mid-scan; its rows already
-    // exist in the compacted partitions, so skipping the vanished file
-    // stays correct
-    indexFrame(spark, indexDir, "lsh")
-      .where(perTable.reduce(_ || _))
+    val m = requireIndex(spark, indexDir, fresh = false)
+    val q = queryVector(spark, sfDir, queryId)
+    lshCandidates(spark, indexDir, m, Seq(lshProbes(m, q, radius)))
+      .getOrElse(spark.createDataFrame(java.util.Collections.emptyList[Row](), LshSchema))
       .dropDuplicates("vec_id") // a vector probed in several tables scores once
       .select(col("vec_id").as[Long], col("embedding").as[Seq[Float]])
-      .map { case (id, v) => (id, cosine(qb.value, v)) }
+      .map { case (id, v) => (id, cosine(q, v)) }
       .toDF("vec_id", "cosine")
   }
 
-  /** LSH probe against the persisted index: partition-pruned scan
-    * ([[annLshProbeScan]]) + TakeOrdered top-k. */
+  /** LSH probe against the persisted index: a pruned scan and a one-job
+    * distinct top-k ([[lshProbe]]). */
   def annLshIndexed(spark: SparkSession, sfDir: String, indexDir: String,
-      queryId: Long, k: Int, radius: Int = 1): DataFrame =
-    rankTopK(spark, annLshProbeScan(spark, sfDir, indexDir, queryId, radius), k)
+      queryId: Long, k: Int, radius: Int = 1): DataFrame = {
+    import spark.implicits._
+    val m = requireIndex(spark, indexDir, fresh = false)
+    lshProbe(spark, indexDir, m, queryVector(spark, sfDir, queryId), k, radius)
+      .toSeq.zipWithIndex.map { case (id, i) => (i + 1, id) }.toDF("rank", "vec_id")
+  }
+
+  /** [[annLshIndexed]]'s ranked ids, starting from manifest `m`. */
+  private[graft] def lshProbe(spark: SparkSession, indexDir: String, m: AnnManifest,
+      q: Array[Float], k: Int, radius: Int): Array[Long] =
+    retrying(spark, indexDir, m) { m =>
+      topKScan(lshCandidates(spark, indexDir, m, Seq(lshProbes(m, q, radius))), q, k).map(_._1)
+    }
 
   /** IVF probe against the persisted index, EXACT by construction:
-    * phase 1 is a partition-pruned read of a RADIUS-AWARE initial list
-    * set (sized from the persisted per-list radii + member counts so the
-    * certificate usually fires immediately — see the selection comment
-    * below); the radii then either CERTIFY the top-k as globally exact
-    * ([[certifiedExpansion]] returns nothing) or name the only other
-    * lists that could hold a better candidate, which phase 2 reads
-    * (again pruned) and merges. With genuine cluster structure the
-    * common case is ONE pruned read; a clusterless corpus honestly pays
-    * for more lists instead of silently returning wrong neighbors.
-    * Driver state is O(k + nlist). `nprobe` is retained for signature
-    * compatibility; the selection is adaptive and ignores it. */
+    * phase 1 is a pruned read of a RADIUS-AWARE initial list set (sized
+    * from the manifest's per-list radii + member counts so the certificate
+    * usually fires immediately — see [[ivfProbe]]); the radii then either
+    * CERTIFY the top-k as globally exact ([[certifiedExpansion]] returns
+    * nothing) or name the only other lists that could hold a better
+    * candidate, which phase 2 reads (again pruned) and merges. With genuine
+    * cluster structure the common case is ONE pruned read; a clusterless
+    * corpus honestly pays for more lists instead of silently returning
+    * wrong neighbors. Driver state is O(k + nlist). `nprobe` is retained
+    * for signature compatibility; the selection is adaptive and ignores it. */
   def annIvfIndexed(spark: SparkSession, sfDir: String, indexDir: String,
       queryId: Long, k: Int, nprobe: Int = 6): DataFrame = {
     import spark.implicits._
-    val (cents, radii, counts) = readQuantizer(spark, indexDir)
-    val q = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .where(col("vec_id") === queryId)
-      .select(col("embedding")).as[Seq[Float]].head().toArray
-    val qb = spark.sparkContext.broadcast(q)
-    val dists = centroidDistances(l2normalize(q), cents)
-    // RADIUS-AWARE initial probe choice (v5, replacing a fixed nprobe):
-    // take lists in centroid-distance order until their member counts
-    // cover k — every member of list j has cosine >= 1 - (d_j + r_j)²/2,
-    // so the true k-th best after scanning that prefix is >= B, the min
-    // of those pessimistic bounds. Then pre-add every other list whose
-    // OPTIMISTIC bound 1 - max(0, d_j - r_j)²/2 reaches B (the same test
-    // the certificate will apply, against a bound the scan can only
-    // improve) — with honest counts the certificate then fires empty and
-    // the probe is ONE pruned read. Counts are advisory (a crashed append
-    // over-counts, making B too optimistic at worst): the certificate
-    // below remains the exactness authority and pays a second pruned
-    // read only in that crash window.
+    val m = requireIndex(spark, indexDir, fresh = false)
+    ivfProbe(spark, indexDir, m, queryVector(spark, sfDir, queryId), k)
+      .toSeq.zipWithIndex.map { case (id, i) => (i + 1, id) }.toDF("rank", "vec_id")
+  }
+
+  /** [[annIvfIndexed]]'s ranked ids, starting from manifest `m`. */
+  private[graft] def ivfProbe(spark: SparkSession, indexDir: String, m0: AnnManifest,
+      q: Array[Float], k: Int): Array[Long] = retrying(spark, indexDir, m0) { m =>
+    val (radii, counts) = (m.radii, m.counts)
+    val dists = centroidDistances(l2normalize(q), m.quant.cents)
+    // RADIUS-AWARE initial probe choice (replacing a fixed nprobe): take
+    // lists in centroid-distance order until their member counts cover k —
+    // every member of list j has cosine >= 1 - (d_j + r_j)²/2, so the true
+    // k-th best after scanning that prefix is >= B, the min of those
+    // pessimistic bounds. Then pre-add every other list whose OPTIMISTIC
+    // bound 1 - max(0, d_j - r_j)²/2 reaches B (the same test the
+    // certificate will apply, against a bound the scan can only improve) —
+    // the manifest's counts are exact, so the certificate then fires empty
+    // and the probe is ONE pruned read. The certificate below stays the
+    // exactness authority.
     val eps = CertEps
     val initial = scala.collection.mutable.LinkedHashSet.empty[Int]
     var covered = 0L
@@ -109,77 +138,60 @@ private[spark] trait AnnProbeOps extends AnnIndexOps {
     // populated list is already in `initial`
     val first = initial.toSet
 
-    def scanTopK(lists: Set[Int]): Array[(Long, Double)] =
-      indexFrame(spark, indexDir, "ivf")
-        .where(col("list_id").isin(lists.toSeq: _*))
-        // duplicate-tolerant like every probe (see compactAnnIndex: the
-        // compaction crash window may leave a vector in two batches)
-        .dropDuplicates("vec_id")
-        .select(col("vec_id").as[Long], col("embedding").as[Seq[Float]])
-        .map { case (id, v) => (id, cosine(qb.value, v)) }
-        .orderBy(col("_2").desc, col("_1")).limit(k)
-        .as[(Long, Double)].collect()
+    def scanTopK(lists: Set[Int]): Array[(Long, Double)] = topKScan(
+      sectionScan(spark, indexDir, m, "ivf", lists.toArray.sorted.map(_.toLong))
+        .map(_.where(col("list_id").isin(lists.toSeq: _*))), q, k)
 
     val top1 = scanTopK(first)
     val kth = if (top1.length >= k) top1.iterator.map(_._2).min else -1.0
     val expand = certifiedExpansion(dists, radii, first, kth)
-    val ids =
-      if (expand.isEmpty) top1.map(_._1)
-      else (top1 ++ scanTopK(expand)) // phase sets are disjoint: no dup ids
-        .sortBy { case (id, c) => (-c, id) }.take(k).map(_._1)
-    ids.toSeq.zipWithIndex.map { case (id, i) => (i + 1, id) }.toDF("rank", "vec_id")
+    if (expand.isEmpty) top1.map(_._1)
+    else (top1 ++ scanTopK(expand)) // phase sets are disjoint: no dup ids
+      .sortWith(TopK.cmp(_, _) < 0).take(k).map(_._1)
   }
 
-  /** batch LSH probe: ONE partition-pruned read serves a whole query set —
-    * the production shape when ANN queries arrive in batches (dedup
+  /** batch LSH probe: ONE pruned read serves a whole query set — the
+    * production shape when ANN queries arrive in batches (dedup
     * candidates, recommendation fan-out). The scan filter is the UNION of
     * every query's probe buckets (still pruned: O(m * probes) buckets
-    * total), the tiny query set broadcasts, and each surviving row is
-    * scored only against the queries whose probe set contains its bucket.
-    * Per-query window ranking is fine here because each query's candidate
-    * set is bucket-sized, not corpus-sized. */
+    * total), each surviving row is scored only against the queries whose
+    * probe set contains its bucket, and each partition keeps a distinct
+    * top-k per query that the driver merges — one job, no shuffle. Output
+    * rows (qid, rank, vec_id) in (qid, rank) order. */
   def annLshIndexedBatch(spark: SparkSession, sfDir: String, indexDir: String,
       queryIds: Seq[Long], k: Int, radius: Int = 1): DataFrame = {
     import spark.implicits._
-    val (planes, tables, _, _, _) = readMeta(spark, indexDir)
-    val shift = math.max(0, planes - 8)
-    val qvecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .where(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as[Long], col("embedding").as[Seq[Float]])
-      .collect().sortBy(_._1)
-    // per query, per table: the probe set
-    val queries: Array[(Long, Array[Float], Array[Set[Int]])] = qvecs.map { case (id, v) =>
-      val arr = v.toArray
-      (id, arr, Array.tabulate(tables)(t => probeSetR(hyperplaneSig(arr, planes, t), planes, radius)))
-    }
-    val qb = spark.sparkContext.broadcast(queries)
-    // union scan filter: tbl = t AND sigp IN (all queries' prefixes) AND sig IN (all probes)
-    val perTable = (0 until tables).map { t =>
-      val probes = queries.iterator.flatMap(_._3(t)).toSeq.distinct
-      val prefixes = probes.map(_ >>> shift).distinct
-      col("tbl") === t && col("sigp").isin(prefixes: _*) && col("sig").isin(probes: _*)
-    }
-    val scored = indexFrame(spark, indexDir, "lsh")
-      .where(perTable.reduce(_ || _))
-      .select(col("vec_id").as[Long], col("embedding").as[Seq[Float]],
-        col("tbl").as[Int], col("sig").as[Int])
-      .flatMap { case (id, v, tbl, sig) =>
-        // a vector appears once per table in the index; emit it for every
-        // query probing this bucket — multi-table hits collapse in the
-        // (qid, vec_id) dedup below
-        qb.value.iterator.flatMap { case (qid, qv, probes) =>
-          if (probes(tbl).contains(sig)) Iterator.single((qid, id, cosine(qv, v)))
-          else Iterator.empty
-        }
+    val qvecs = queryVectors(spark, sfDir, queryIds).sortBy(_._1)
+    val merged = retrying(spark, indexDir, requireIndex(spark, indexDir, fresh = false)) { m =>
+      val probes = qvecs.map { case (_, v) => lshProbes(m, v, radius) }
+      val tops = qvecs.map(_ => new TopK(k))
+      lshCandidates(spark, indexDir, m, probes.toSeq).foreach { df =>
+        df.select(col("vec_id").as[Long], col("embedding").as[Seq[Float]],
+            col("tbl").as[Int], col("sig").as[Int])
+          .mapPartitions { it =>
+            val part = qvecs.map(_ => new TopK(k))
+            it.foreach { case (id, v, tbl, sig) =>
+              var i = 0
+              while (i < part.length) {
+                if (probes(i)(tbl).contains(sig)) part(i).add(id, cosine(qvecs(i)._2, v))
+                i += 1
+              }
+            }
+            part.indices.iterator.flatMap(i => part(i).result.iterator.map(r => (i, r._1, r._2)))
+          }.collect().foreach { case (i, id, c) => tops(i).add(id, c) }
       }
-      .toDF("qid", "vec_id", "cos")
-      .dropDuplicates("qid", "vec_id")
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("vec_id"))
-      .orderBy("qid", "rank")
+      tops
+    }
+    qvecs.indices.flatMap { i =>
+      merged(i).result.zipWithIndex.map { case ((id, _), r) => (qvecs(i)._1, r + 1, id) }
+    }.toDF("qid", "rank", "vec_id")
   }
+
+  /** Spark's double sort semantics for the local eval fast paths:
+    * -0.0 == 0.0 (SQLOrderingUtil), descending by score, vec_id tiebreak
+    * — matches the distributed windows' (cos desc, vec_id) exactly. */
+  private def topKLocal(rows: Iterable[(Long, Double)], k: Int): Seq[(Long, Double)] =
+    rows.toSeq.sortWith(TopK.cmp(_, _) < 0).take(k)
 
   /** multi-query LSH ANN eval with a CROSS-ENGINE oracle: emits the exact
     * top-k (qid, rank, vec_id) computed over multi-probe LSH candidates; the
@@ -188,17 +200,9 @@ private[spark] trait AnnProbeOps extends AnnIndexOps {
     * probed radius) hash-mismatches — the recall bit is no longer
     * self-graded. Window-per-qid is eval-harness shape; the production
     * single-query path is [[annLshIndexed]] (TakeOrdered, pruned read).
-    * `materialize = false` returns the lazy plan (the persisted signature
-    * frame then stays cached until the caller releases it). */
-  /** Spark's double sort semantics for the local eval fast paths:
-    * -0.0 == 0.0 (SQLOrderingUtil), descending by score, vec_id tiebreak
-    * — matches the distributed windows' (cos desc, vec_id) exactly. */
-  private def topKLocal(rows: Iterable[(Long, Double)], k: Int): Seq[(Long, Double)] =
-    rows.toSeq.sortWith { (a, b) =>
-      val c = if (a._2 == b._2) 0 else java.lang.Double.compare(b._2, a._2)
-      if (c != 0) c < 0 else a._1 < b._1
-    }.take(k)
-
+    * `materialize = false` returns the lazy plan on the distributed path;
+    * under the driver budget the result is always a local relation (it
+    * holds no cached intermediates, so there is nothing to release). */
   def annLshTopKEval(spark: SparkSession, sfDir: String, m: Int, k: Int,
       radius: Int = 2, materialize: Boolean = true,
       driverVecBudget: Int = AnnDriverVecBudget): DataFrame = {
@@ -271,7 +275,9 @@ private[spark] trait AnnProbeOps extends AnnIndexOps {
     * yet confirm get a phase-2 pass over exactly the lists that could
     * still hold a better candidate. Inherently two-phase/eager (the
     * expansion depends on phase-1 scores); window-per-qid is eval shape —
-    * the production single-query path is [[annIvfIndexed]]. */
+    * the production single-query path is [[annIvfIndexed]].
+    * `materialize` as in [[annLshTopKEval]]: under the driver budget the
+    * result is always a local relation. */
   def annIvfTopKEval(spark: SparkSession, sfDir: String, m: Int, k: Int,
       nprobe: Int = 6, materialize: Boolean = true,
       driverVecBudget: Int = AnnDriverVecBudget): DataFrame = {

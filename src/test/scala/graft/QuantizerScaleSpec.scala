@@ -67,17 +67,17 @@ class QuantizerScaleSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAl
     emb.write.mode("overwrite").parquet(s"$shardDir/embeddings.parquet")
     try {
       TextOps.buildAnnIndex(spark, emb, dir, nlistOverride = 4500)
-      // the two-level structure is persisted
-      assert(new java.io.File(s"$dir/coarse").exists(), "coarse table missing")
-      val meta = spark.read.parquet(s"$dir/meta").head()
-      val nlist = meta.getAs[Int]("nlist")
+      // the two-level structure is persisted in the quantizer file
+      val m = AnnTestUtil.manifest(spark, dir)
+      val (starts, lens, cents) = m.quant match {
+        case graft.spark.TwoLevelQuantizer(_, st, ln, c) => (st, ln, c)
+        case other => fail(s"coarse table missing: $other")
+      }
+      val nlist = m.radii.length
       assert(nlist > 64, s"expected a real codebook, got nlist=$nlist")
-      val nCents = spark.read.parquet(s"$dir/centroids").count()
-      assert(nCents == nlist, s"meta nlist=$nlist vs centroids=$nCents")
+      assert(cents.length == nlist, s"manifest nlist=$nlist vs centroids=${cents.length}")
       // spans cover the flat codebook exactly once
-      val spans = spark.read.parquet(s"$dir/coarse")
-        .select("list_start", "list_len").collect()
-        .map(r => (r.getInt(0), r.getInt(1))).sortBy(_._1)
+      val spans = starts.zip(lens).sortBy(_._1)
       assert(spans.map(_._2.toLong).sum == nlist)
       spans.sliding(2).foreach {
         case Array((s1, l1), (s2, _)) => assert(s1 + l1 == s2, "non-contiguous spans")
@@ -110,8 +110,8 @@ class QuantizerScaleSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAl
     val emb = shard(1200, 6)
     try {
       TextOps.buildAnnIndex(spark, emb, dir, nlistOverride = 4200)
-      val nlist = spark.read.parquet(s"$dir/meta").head().getAs[Int]("nlist")
-      val assigned = spark.read.parquet(s"$dir/ivf")
+      val nlist = AnnTestUtil.manifest(spark, dir).radii.length
+      val assigned = AnnTestUtil.section(spark, dir, "ivf")
         .select("vec_id", "list_id").collect()
       assert(assigned.length == 1200, "every vector must be indexed")
       assert(assigned.forall { r => val l = r.getInt(1); l >= 0 && l < nlist })

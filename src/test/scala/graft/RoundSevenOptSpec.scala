@@ -184,22 +184,23 @@ class RoundSevenOptSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val local = lifecycle(baseL, TextOps.AnnDriverVecBudget)
       val dist = lifecycle(baseD, 0)
-      // identical section CONTENT: same rows (values), same partition dirs
+      // identical section CONTENT: same rows (values) in the same batches
       def rows(dir: String, section: String, cols: Seq[String]): Seq[Seq[Any]] =
-        spark.read.parquet(s"$dir/$section").select(cols.map(col): _*)
+        AnnTestUtil.section(spark, dir, section).select(cols.map(col): _*)
           .collect().map(_.toSeq.map {
             case s: Seq[_] => s.toVector
             case x => x
           }).sortBy(_.toString()).toSeq
       for ((section, cols) <- Seq(
-        "meta" -> Seq("planes", "tables", "nlist", "n", "version"),
-        "centroids" -> Seq("list_id", "centroid"),
-        "radii" -> Seq("list_id", "radius", "cnt", "batch"),
-        "lsh" -> Seq("vec_id", "tbl", "sig", "sigp", "batch", "embedding"),
-        "ivf" -> Seq("vec_id", "list_id", "batch", "embedding"),
-        "batches" -> Seq("batch", "n_rows")))
+        "lsh" -> Seq("vec_id", "tbl", "sig", "batch", "embedding"),
+        "ivf" -> Seq("vec_id", "list_id", "batch", "embedding")))
         assert(rows(local, section, cols) == rows(dist, section, cols),
           s"section $section differs between the driver and distributed paths")
+      // identical manifest content: version, planes, tables, centroids,
+      // exact radii and counts, batches, and per-file rows and key ranges
+      assert(AnnTestUtil.content(AnnTestUtil.manifest(spark, local)) ==
+        AnnTestUtil.content(AnnTestUtil.manifest(spark, dist)),
+        "manifest differs between the driver and distributed paths")
       // and identical probe results end-to-end over the compacted index
       val sf = java.nio.file.Files.createTempDirectory("ann-eq-sf").toString
       try {

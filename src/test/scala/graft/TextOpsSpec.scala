@@ -272,21 +272,38 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(lsh.collect().map(_.getLong(1)).toSeq == expected)
       assert(TextOps.annIvfIndexed(spark, sfDir, dir, 0L, 5, nprobe = 6)
         .collect().map(_.getLong(1)).toSeq == expected)
-      // the probe must be a pruned read, not a corpus scan: partition
-      // filters on (tbl, sigp) and a pushed-down sig filter in the scan
+      // the probe must be a pruned read, not a corpus scan: the scan reads
+      // exactly the lsh files whose manifest key range meets a probed
+      // (tbl, sig) key, and the sig filter is pushed down into parquet
       // (inspected on the lazy probe scan — the ranked result itself is a
       // local relation after the k-row collect)
-      val plan = TextOps.annLshProbeScan(spark, sfDir, dir, 0L, radius = 2)
-        .queryExecution.executedPlan.toString
-      val pf = plan.linesIterator.find(_.contains("PartitionFilters: [")).getOrElse("")
-      assert(pf.contains("tbl") && pf.contains("sigp"),
-        s"no (tbl, sigp) partition pruning in scan: $pf")
+      val scan = TextOps.annLshProbeScan(spark, sfDir, dir, 0L, radius = 2)
+      val m = AnnTestUtil.manifest(spark, dir)
+      val q = spark.read.parquet(s"$sfDir/embeddings.parquet").where(col("vec_id") === 0L)
+        .select("embedding").head().getSeq[Float](0)
+      val keys = (0 until m.tables).flatMap(t => TextOps.probeSetR(
+        TextOps.hyperplaneSig(q, m.planes, t), m.planes, 2).map(TextOps.lshKey(t, _)))
+      def norm(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+      val selected = m.files.filter(f => f.section == "lsh" &&
+        keys.exists(k => k >= f.minKey && k <= f.maxKey)).map(f => norm(s"$dir/${f.path}"))
+      assert(selected.nonEmpty)
+      assert(scan.inputFiles.map(norm).toSeq.sorted == selected.sorted,
+        "probe scan must read exactly the files the manifest selects")
+      val plan = scan.queryExecution.executedPlan.toString
       assert(plan.contains("In(sig"), "sig filter not pushed to parquet")
-      // layout invariants: partition directories exist per (tbl, sigp)
-      val lshDirs = new java.io.File(s"$dir/lsh").listFiles().filter(_.isDirectory)
-      assert(lshDirs.nonEmpty && lshDirs.forall(_.getName.startsWith("tbl=")))
-      val ivfDirs = new java.io.File(s"$dir/ivf").listFiles().filter(_.isDirectory)
-      assert(ivfDirs.nonEmpty && ivfDirs.forall(_.getName.startsWith("list_id=")))
+      // layout invariants: both sections listed, every file present, key
+      // ranges inside (tbl, sig) / list_id bounds, one row per (tbl,
+      // vector) and per vector
+      val n = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
+      val lshHi = TextOps.lshKey(m.tables - 1, (1 << m.planes) - 1)
+      for ((section, rows, hi) <- Seq(("lsh", n * m.tables, lshHi), ("ivf", n, m.radii.length - 1L))) {
+        val fs = m.files.filter(_.section == section)
+        assert(fs.nonEmpty && fs.map(_.rows).sum == rows, s"$section rows")
+        fs.foreach { f =>
+          assert(new java.io.File(s"$dir/${f.path}").isFile, f.path)
+          assert(0L <= f.minKey && f.minKey <= f.maxKey && f.maxKey <= hi, s"$section range $f")
+        }
+      }
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
@@ -332,7 +349,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lock = new java.io.File(indexDir.getPath + ".lock")
     def wreck(): Unit = { // a stale incomplete dir squatting on the name
       org.apache.commons.io.FileUtils.deleteDirectory(indexDir)
-      new java.io.File(indexDir, "meta").mkdirs() // no ivf/_SUCCESS => !versionOk
+      new java.io.File(indexDir, "meta").mkdirs() // no manifest => !versionOk
     }
     def probeOk(): Unit =
       assert(TextOps.annLshIndexed(spark, sfDir, indexDir.getPath, 0L, 5, radius = 2)
@@ -401,28 +418,32 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("compactAnnIndex: batches fold into one partition set, probes unchanged, idempotent") {
-    val s = spark
-    import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("ann-idx-cpt").toString
     try {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val n = emb.count()
       TextOps.buildAnnIndex(spark, emb.where(col("vec_id") % 3 === 0), dir)
       TextOps.appendAnnIndex(spark, emb.where(col("vec_id") % 3 === 1), dir, "b1")
       TextOps.appendAnnIndex(spark, emb.where(col("vec_id") % 3 === 2), dir, "b2")
       val expected = bruteIds(0L, 5)
-      def batches(): Seq[String] = spark.read.parquet(s"$dir/batches")
-        .select(col("batch").as[String]).collect().sorted.toSeq
+      def batches(): Seq[String] = AnnTestUtil.batches(spark, dir)
       assert(batches() == Seq("b0", "b1", "b2"))
+      val folded = AnnTestUtil.manifest(spark, dir).batches.map(_.dir)
 
       TextOps.compactAnnIndex(spark, dir, epoch = "1")
       assert(batches() == Seq("compacted-1"), "superseded batches must be gone")
-      // one batch dir per (tbl, sigp) leaf; old partitions physically deleted
-      val lshLeaf = new java.io.File(s"$dir/lsh").listFiles().filter(_.isDirectory).head
-        .listFiles().filter(_.isDirectory).head
-      val leafBatches = lshLeaf.listFiles().filter(_.isDirectory).map(_.getName).toSeq
-      assert(leafBatches == Seq("batch=compacted-1"), s"leaf still holds $leafBatches")
-      // row counts: exactly one row per vector (ivf), per (tbl, vector) (lsh)
-      assert(spark.read.parquet(s"$dir/ivf").count() == emb.count())
+      // every live file sits in the one compacted batch dir; the folded
+      // batches' dirs are physically deleted
+      val m = AnnTestUtil.manifest(spark, dir)
+      assert(m.files.forall(_.path.startsWith(m.batches.head.dir + "/")))
+      folded.foreach(d => assert(!new java.io.File(s"$dir/$d").exists(), s"$d still on disk"))
+      val dataDirs = new java.io.File(s"$dir/data").listFiles().filter(_.isDirectory).map(_.getName).toSeq
+      assert(dataDirs == Seq(m.batches.head.dir.stripPrefix("data/")), s"data dir holds $dataDirs")
+      // row counts: exactly one row per vector (ivf), per (tbl, vector)
+      // (lsh), and the manifest's exact counts agree
+      assert(AnnTestUtil.section(spark, dir, "ivf").count() == n)
+      assert(AnnTestUtil.section(spark, dir, "lsh").count() == n * m.tables)
+      assert(m.counts.sum == n && m.n == n)
       // probes identical after compaction
       assert(TextOps.annLshIndexed(spark, sfDir, dir, 0L, 5, radius = 2)
         .collect().map(_.getLong(1)).toSeq == expected)
@@ -431,15 +452,17 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // re-running the same compaction is a no-op; a later epoch folds the
       // compacted batch again (the steady-state maintenance loop)
       TextOps.compactAnnIndex(spark, dir, epoch = "1")
+      assert(AnnTestUtil.manifest(spark, dir).version == m.version, "re-run must publish nothing")
       TextOps.appendAnnIndex(spark, emb.where(col("vec_id") % 3 === 2), dir, "b3")
       // duplicate-tolerance: b3 re-ingests vectors already in compacted-1 —
-      // probes must dedup on vec_id (the compaction crash-window contract)
+      // probes must dedup on vec_id (the re-ingest contract)
       assert(TextOps.annIvfIndexed(spark, sfDir, dir, 0L, 5, nprobe = 6)
         .collect().map(_.getLong(1)).toSeq == expected)
       TextOps.compactAnnIndex(spark, dir, epoch = "2")
       assert(batches() == Seq("compacted-2"))
-      assert(spark.read.parquet(s"$dir/ivf").count() == emb.count(),
+      assert(AnnTestUtil.section(spark, dir, "ivf").count() == n,
         "duplicate vectors must collapse on compaction")
+      assert(AnnTestUtil.manifest(spark, dir).counts.sum == n)
       assert(TextOps.annLshIndexed(spark, sfDir, dir, 0L, 5, radius = 2)
         .collect().map(_.getLong(1)).toSeq == expected)
     } finally {
@@ -447,56 +470,200 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("crashed append (radii published, data not landed) stays exact; probes are window-free") {
+  // ---------- v6 commit protocol: gate, crash points, races ----------
+
+  private lazy val allVecs: Seq[(Long, Seq[Float])] = {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ann-idx-crash").toString
+    spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id").as[Long], col("embedding").as[Seq[Float]]).collect().toSeq
+  }
+
+  /** every probe over `dir` returns the exact top-5 of the `live` vectors,
+    * and the index holds each live vector exactly once per section row */
+  private def assertLive(dir: String, live: Long => Boolean, tag: String): Unit = {
+    val s = spark
+    import s.implicits._
+    val vecs = allVecs.filter(v => live(v._1))
+    for (q <- Seq(0L, 1L, 7L)) {
+      val want = AnnTestUtil.bruteTopK(vecs, allVecs.find(_._1 == q).get._2, 5)
+      assert(TextOps.annIvfIndexed(spark, sfDir, dir, q, 5).collect().map(_.getLong(1)).toSeq == want,
+        s"$tag: IVF q=$q")
+      assert(TextOps.annLshIndexed(spark, sfDir, dir, q, 5, radius = 3)
+        .collect().map(_.getLong(1)).toSeq == want, s"$tag: LSH q=$q")
+    }
+    val ivf = AnnTestUtil.section(spark, dir, "ivf").select(col("vec_id").as[Long]).collect()
+    assert(ivf.sorted.toSeq == vecs.map(_._1).sorted, s"$tag: live vectors missing or doubled")
+    assert(AnnTestUtil.manifest(spark, dir).counts.sum == vecs.length, s"$tag: counts")
+  }
+
+  test("v6 gate: append and compact refuse a v5 layout before any Spark job") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("ann-v5").toString
+    val sc = spark.sparkContext
+    try {
+      // a v5-layout directory: meta + radii + ivf tables, no manifest. Its
+      // radii carry no counts, which made the v5 compaction size check 0
+      // and collect the whole ivf table
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      emb.select(col("vec_id"), col("embedding"), lit(0).as("list_id"), lit("b0").as("batch"))
+        .write.partitionBy("list_id", "batch").parquet(s"$dir/ivf")
+      Seq((4, 4, 8, 500L, 5)).toDF("planes", "tables", "nlist", "n", "version")
+        .write.parquet(s"$dir/meta")
+      Seq((0, 0.5, "b0")).toDF("list_id", "radius", "batch")
+        .write.partitionBy("batch").parquet(s"$dir/radii")
+      sc.setJobGroup("v6-gate", "v6 gate")
+      val errs = Seq(
+        intercept[IllegalArgumentException](TextOps.compactAnnIndex(spark, dir, epoch = "1")),
+        intercept[IllegalArgumentException](TextOps.appendAnnIndex(spark, emb, dir, "b1")))
+      errs.foreach(e => assert(e.getMessage.contains("rebuild"), e.getMessage))
+      // one job AFTER the refusals: once the status tracker shows it, any
+      // job the refusals ran would show too (events arrive in order)
+      sc.parallelize(Seq(1), 1).count() // exactly one job
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (sc.statusTracker.getJobIdsForGroup("v6-gate").isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(sc.statusTracker.getJobIdsForGroup("v6-gate").length == 1,
+        "the refusals must run no Spark job")
+    } finally {
+      sc.clearJobGroup()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("probe query vectors use a fixed schema: ARRAY<DOUBLE> embeddings fail loudly") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("ann-dbl").toString
+    try {
+      allVecs.map { case (id, v) => (id, v.map(_.toDouble)) }.toDF("vec_id", "embedding")
+        .write.parquet(s"$dir/embeddings.parquet")
+      val idx = s"$dir/idx"
+      TextOps.buildAnnIndex(spark, allVecs.toDF("vec_id", "embedding"), idx)
+      Seq[() => Any](
+        () => TextOps.annTopK(spark, dir, 0L, 5).collect(),
+        () => TextOps.annIvfIndexed(spark, dir, idx, 0L, 5).collect(),
+        () => TextOps.annLshIndexed(spark, dir, idx, 0L, 5).collect(),
+        () => TextOps.annLshIndexedBatch(spark, dir, idx, Seq(0L, 1L), 5).collect()
+      ).foreach(f => intercept[Exception](f()))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("ANN crash injection: append and compact stopped at every step stay exact") {
+    val s = spark
+    import s.implicits._
+    val emb = allVecs.toDF("vec_id", "embedding")
+    val even = emb.where(col("vec_id") % 2 === 0)
+    val odd = emb.where(col("vec_id") % 2 === 1)
+    val root = java.nio.file.Files.createTempDirectory("ann-crash").toString
+    var runs = 0
+    def fresh(appended: Boolean): String = {
+      runs += 1
+      val dir = s"$root/idx$runs"
+      TextOps.buildAnnIndex(spark, even, dir)
+      if (appended) TextOps.appendAnnIndex(spark, odd, dir, "b1")
+      dir
+    }
+    try {
+      val refAppend = AnnTestUtil.content(AnnTestUtil.manifest(spark, fresh(appended = true)))
+      val refCompact = {
+        val d = fresh(appended = true)
+        TextOps.compactAnnIndex(spark, d, epoch = "1")
+        AnnTestUtil.content(AnnTestUtil.manifest(spark, d))
+      }
+      type Stage = String => Either[graft.spark.AnnManifest, graft.spark.AnnCommit]
+      for ((op, appended, stage, rerun, ref) <- Seq[(String, Boolean, Stage, String => Unit, Seq[Any])](
+        ("append", false, d => TextOps.stageAppend(spark, odd, d, "b1"),
+          d => TextOps.appendAnnIndex(spark, odd, d, "b1"), refAppend),
+        ("compact", true, d => TextOps.stageCompact(spark, d, "1"),
+          d => TextOps.compactAnnIndex(spark, d, "1"), refCompact))) {
+        // stopped after the lsh write, and after both writes (before
+        // publish): nothing live changed
+        for (writes <- 1 to 2) {
+          val dir = fresh(appended)
+          val before = AnnTestUtil.manifest(spark, dir)
+          stage(dir).toOption.get.writes.take(writes).foreach(_())
+          assert(AnnTestUtil.manifest(spark, dir).version == before.version)
+          assertLive(dir, id => appended || id % 2 == 0, s"$op stopped after $writes writes")
+          rerun(dir)
+          assert(AnnTestUtil.content(AnnTestUtil.manifest(spark, dir)) == ref, s"$op re-run")
+          assertLive(dir, _ => true, s"$op re-run after $writes writes")
+        }
+        // stopped after publish, before cleanup: live, superseded dirs linger
+        val dir = fresh(appended)
+        val before = AnnTestUtil.manifest(spark, dir)
+        val c = stage(dir).toOption.get
+        c.writes.foreach(_())
+        val m = c.publish()
+        assert(AnnTestUtil.content(m) == ref)
+        val gone = before.batches.filterNot(m.batches.contains).map(_.dir)
+        assert(gone.nonEmpty == (op == "compact") && gone.forall(d => new java.io.File(s"$dir/$d").exists()))
+        assertLive(dir, _ => true, s"$op stopped after publish")
+        rerun(dir)
+        assert(AnnTestUtil.manifest(spark, dir).version == m.version, s"$op re-run publishes nothing")
+        gone.foreach(d => assert(!new java.io.File(s"$dir/$d").exists(), s"$op re-run left $d"))
+        assertLive(dir, _ => true, s"$op re-run after publish")
+      }
+      // the production probes rank on the driver: no WindowExec anywhere
+      val dir = s"$root/idx$runs"
+      Seq(
+        TextOps.annIvfIndexed(spark, sfDir, dir, 0L, 5).queryExecution.executedPlan.toString,
+        TextOps.annLshIndexed(spark, sfDir, dir, 0L, 5, radius = 2).queryExecution.executedPlan.toString,
+        TextOps.annTopK(spark, sfDir, 0L, 5).queryExecution.executedPlan.toString
+      ).foreach(p => assert(!p.contains("Window"), s"WindowExec in probe plan:\n$p"))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    }
+  }
+
+  test("concurrent appends from two threads both land in the final manifest") {
+    val dir = java.nio.file.Files.createTempDirectory("ann-race").toString
     try {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val half1 = emb.where(col("vec_id") % 2 === 0)
-      TextOps.buildAnnIndex(spark, half1, dir)
-      // simulate appendAnnIndex crashing AFTER its radii partition lands
-      // but BEFORE the batch data: publish a phantom batch whose radii
-      // strictly over-estimate live membership (the documented invariant —
-      // readers max-merge, so these dominate)
-      // v5: a real crashed append's radii partition carries its cnt column
-      // too — an OVER-count (members that never landed), which makes the
-      // radius-aware initial bound too optimistic at worst; the
-      // certificate backstop must still deliver the exact answer
-      val phantom = spark.read.parquet(s"$dir/radii")
-        .select(col("list_id"), (col("radius") * 3.0 + 0.5).as("radius"),
-          (col("cnt") * 2 + 7).as("cnt"))
-        .collect().map(r => (r.getInt(0), r.getDouble(1), r.getLong(2)))
-      spark.createDataFrame(phantom.toSeq).toDF("list_id", "radius", "cnt")
-        .withColumn("batch", lit("crashed"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch").parquet(s"$dir/radii")
-      // expected = brute force over what actually landed (half1 only)
-      val qv = emb.where(col("vec_id") === 0L)
-        .select(col("embedding")).as[Seq[Float]].head().toArray
-      def cos(v: Seq[Float]): Double = {
-        var dot = 0.0; var nq = 0.0; var nv = 0.0
-        var i = 0
-        while (i < qv.length && i < v.length) {
-          dot += qv(i) * v(i); nq += qv(i) * qv(i); nv += v(i) * v(i); i += 1
-        }
-        if (nq == 0.0 || nv == 0.0) 0.0 else dot / math.sqrt(nq * nv)
+      def part(r: Int) = emb.where(col("vec_id") % 7 === r)
+      TextOps.buildAnnIndex(spark, part(0), dir)
+      def both(run: Int => Unit, rs: Seq[Int]): Unit = {
+        val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+        val ts = rs.map(r => new Thread(() => try run(r) catch { case t: Throwable => errs.add(t); () }))
+        ts.foreach(_.start()); ts.foreach(_.join())
+        assert(errs.isEmpty, errs)
       }
-      val expected = emb.where(col("vec_id") % 2 === 0)
-        .select(col("vec_id").as[Long], col("embedding").as[Seq[Float]])
-        .collect().map { case (id, v) => (id, cos(v)) }
-        .sortBy { case (id, c) => (-c, id) }.take(5).map(_._1).toSeq
-      val got = TextOps.annIvfIndexed(spark, sfDir, dir, 0L, 5, nprobe = 6)
-      assert(got.collect().map(_.getLong(1)).toSeq == expected,
-        "over-estimated radii must only widen the scan, never change the result")
-      // the production probes rank on the driver: no WindowExec anywhere
-      Seq(
-        got.queryExecution.executedPlan.toString,
-        TextOps.annLshIndexed(spark, sfDir, dir, 0L, 5, radius = 2)
-          .queryExecution.executedPlan.toString,
-        TextOps.annTopK(spark, sfDir, 0L, 5)
-          .queryExecution.executedPlan.toString
-      ).foreach(p => assert(!p.contains("Window"), s"WindowExec in probe plan:\n$p"))
+      // free-running appends
+      both(r => TextOps.appendAnnIndex(spark, part(r), dir, s"t$r"), Seq(1, 2))
+      // publishes released together, so both resolve the same version and
+      // race its successor's create: the loser must re-merge, not overwrite
+      for (pair <- Seq(Seq(3, 4), Seq(5, 6))) {
+        val cs = pair.map(r => r -> TextOps.stageAppend(spark, part(r), dir, s"t$r").toOption.get).toMap
+        cs.values.foreach(_.writes.foreach(_()))
+        val gate = new java.util.concurrent.CyclicBarrier(2)
+        both(r => { gate.await(); cs(r).publish(); () }, pair)
+      }
+      val m = AnnTestUtil.manifest(spark, dir)
+      assert(m.batches.map(_.id).sorted == "b0" +: (1 to 6).map(r => s"t$r"))
+      val n = emb.count()
+      assert(m.counts.sum == n && AnnTestUtil.section(spark, dir, "ivf").count() == n)
+      assert(TextOps.annIvfIndexed(spark, sfDir, dir, 0L, 5).collect().map(_.getLong(1)).toSeq ==
+        bruteIds(0L, 5))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("a probe holding a manifest whose files a compaction deleted stays exact") {
+    val dir = java.nio.file.Files.createTempDirectory("ann-stale").toString
+    try {
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      TextOps.buildAnnIndex(spark, emb.where(col("vec_id") % 2 === 0), dir)
+      TextOps.appendAnnIndex(spark, emb.where(col("vec_id") % 2 === 1), dir, "b1")
+      val old = AnnTestUtil.manifest(spark, dir)
+      TextOps.compactAnnIndex(spark, dir, epoch = "1")
+      assert(old.files.forall(f => !new java.io.File(s"$dir/${f.path}").exists()))
+      val q = allVecs.find(_._1 == 0L).get._2.toArray
+      assert(TextOps.ivfProbe(spark, dir, old, q, 5).toSeq == bruteIds(0L, 5))
+      assert(TextOps.lshProbe(spark, dir, old, q, 5, radius = 2).toSeq == bruteIds(0L, 5))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
@@ -597,24 +764,26 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       TextOps.appendAnnIndex(spark, half2, dir, "b1")
       assert(TextOps.annIvfIndexed(spark, sfDir, dir, 0L, 5, nprobe = 6)
         .collect().map(_.getLong(1)).toSeq == expected, "IVF probe after re-append")
-      val rows = spark.read.parquet(s"$dir/ivf").count()
+      val rows = AnnTestUtil.section(spark, dir, "ivf").count()
       assert(rows == emb.count(), s"duplicate rows after idempotent re-append: $rows")
-      // commit records: one row per batch
-      val batches = spark.read.parquet(s"$dir/batches")
-        .select(col("batch").as[String]).collect().sorted.toSeq
-      assert(batches == Seq("b0", "b1"))
-      // reserved ids rejected: overwriting the build batch or a compaction
-      // target would replace (not merge) its partitions
+      // commit records: one batch per append, counts exact
+      val m = AnnTestUtil.manifest(spark, dir)
+      assert(m.batches.map(_.id).sorted == Seq("b0", "b1"))
+      assert(m.counts.sum == emb.count() && m.n == emb.count())
+      // reserved ids rejected: the build batch and compaction targets
       intercept[IllegalArgumentException] {
         TextOps.appendAnnIndex(spark, half2, dir, "b0")
       }
       intercept[IllegalArgumentException] {
         TextOps.appendAnnIndex(spark, half2, dir, "compacted-1")
       }
-      // batch partition dirs exist under a (tbl, sigp) dir
-      val lshLeaf = new java.io.File(s"$dir/lsh").listFiles().filter(_.isDirectory).head
-        .listFiles().filter(_.isDirectory).head
-      assert(lshLeaf.listFiles().exists(f => f.getName.startsWith("batch=")))
+      // each batch owns its own directory holding both sections
+      m.batches.foreach { b =>
+        val fs = m.files.filter(_.batch == b.id)
+        assert(fs.map(_.section).distinct.sorted == Seq("ivf", "lsh"), b.id)
+        assert(fs.forall(f => f.path.startsWith(b.dir + "/") &&
+          new java.io.File(s"$dir/${f.path}").isFile), b.id)
+      }
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
