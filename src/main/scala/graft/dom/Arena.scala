@@ -254,6 +254,9 @@ final class Arena(initialNodes: Int = 256) {
     new String(buf, off, len, java.nio.charset.StandardCharsets.UTF_8)
 
   def spanEqIgnoreCase(off: Int, len: Int, lower: String): Boolean = {
+    // UTF-8 is never shorter than the UTF-16 units it encodes: most
+    // mismatches end here, before the ASCII scan of `lower`
+    if (len < lower.length) return false
     // fast path: ASCII `lower` (every internal constant and virtually
     // every real selector) — byte-per-char compare with ASCII folding
     var ascii = true

@@ -1,10 +1,16 @@
 package graft.spark
 
-import graft.dom.Arena
+import graft.dom.{Arena, Entities, Utf8Builder}
 import graft.html.{ParseOptions, Parser}
-import graft.query.{Elems, VDoc}
-import graft.selector.Selector
+import graft.query.{Elems, Engine, VDoc}
+import graft.selector.{Selector, Simple}
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** Per-row extraction entry point for Spark executors.
   *
@@ -46,223 +52,147 @@ object Extractor extends Serializable {
     parsed
   }
 
-  /** parse into the thread-local arena; null on parse failure. Same
-    * giant-page shrink guard as [[parseBytes]] — STRING-column workloads
-    * must not pin a rare huge page's buffers either. */
-  def parse(html: String): VDoc = {
-    var arena = arenas.get()
-    if (arena.buf.length > ArenaShrinkChars && html.length < (ArenaShrinkChars >> 3)) {
-      arena = new graft.dom.Arena(1024)
-      arenas.set(arena)
-    }
-    Parser.parseInto(arena, html, ParseOptions.compat) match {
-      case Some(_) => null
-      case None => new VDoc(arena)
-    }
-  }
-
-  /** [[parse]] under the CRAWL profile (compat fixes + HTML5 implicit
-    * tree): implied html/head/body + auto-close, for real crawl pages
-    * that never wrote `<body>`. */
-  def parseCrawl(html: String): VDoc = {
-    var arena = arenas.get()
-    if (arena.buf.length > ArenaShrinkChars && html.length < (ArenaShrinkChars >> 3)) {
-      arena = new graft.dom.Arena(1024)
-      arenas.set(arena)
-    }
-    Parser.parseInto(arena, html, ParseOptions.crawl) match {
-      case Some(_) => null
-      case None => new VDoc(arena)
-    }
-  }
-
   /** a rare giant page must not pin executor memory forever: drop the
     * thread-local arena back to a fresh one when its buffers grew far beyond
     * what the current row needs. */
   private final val ArenaShrinkChars = 32 << 20
 
+  private def arenaFor(len: Int): Arena = {
+    var arena = arenas.get()
+    if (arena.buf.length > ArenaShrinkChars && len < (ArenaShrinkChars >> 3)) {
+      arena = new Arena(1024)
+      arenas.set(arena)
+    }
+    arena
+  }
+
+  /** parse into the thread-local arena; null on parse failure. */
+  def parse(html: String): VDoc = {
+    val arena = arenaFor(html.length)
+    if (Parser.parseInto(arena, html, ParseOptions.compat).isEmpty) new VDoc(arena) else null
+  }
+
   /** parse UTF-8 bytes into the thread-local arena (no intermediate String /
     * char[] garbage); null on parse failure. */
   def parseBytes(html: Array[Byte]): VDoc = parseBytesWith(html, ParseOptions.compat)
 
+  /** [[parseBytes]] under the CRAWL profile (compat fixes + HTML5 implicit
+    * tree): implied html/head/body + auto-close, for real crawl pages
+    * that never wrote `<body>`. */
+  def parseBytesCrawl(html: Array[Byte]): VDoc = parseBytesWith(html, ParseOptions.crawl)
+
   private def parseBytesWith(html: Array[Byte], opts: ParseOptions): VDoc = {
-    var arena = arenas.get()
-    if (arena.buf.length > ArenaShrinkChars && html.length < (ArenaShrinkChars >> 3)) {
-      arena = new graft.dom.Arena(1024)
-      arenas.set(arena)
-    }
-    Parser.parseIntoUtf8(arena, html, opts) match {
-      case Some(_) => null
-      case None => new VDoc(arena)
-    }
+    val arena = arenaFor(html.length)
+    if (Parser.parseIntoUtf8(arena, html, opts).isEmpty) new VDoc(arena) else null
   }
 
-  /** node-local simples (tag/class/id/attr): match is independent of the
-    * rest of the tree, so it can be evaluated mid-walk regardless of
-    * pending removals. */
-  private def nodeLocal(s: graft.selector.Simple): Boolean = s match {
-    case graft.selector.Simple.All => true
-    case _: graft.selector.Simple.Tag => true
-    case _: graft.selector.Simple.Cls => true
-    case _: graft.selector.Simple.Id => true
-    case _: graft.selector.Simple.Attr => true
-    case _ => false
-  }
-
-  /** simple single-compound descendant predicates of the candidate
-    * selectors (node-local only — they are evaluated during the fused
-    * strip walk, before removal executes), or null if any candidate needs
-    * the general engine. */
-  private def candidateCompounds(recipe: Recipe): Array[Array[graft.selector.Simple]] = {
-    val out = new Array[Array[graft.selector.Simple]](recipe.mainCandidates.length)
-    var i = 0
-    recipe.mainCandidates.foreach { s =>
-      compiled(s) match {
-        case Right(sel) if sel.process.lengthCompare(1) == 0 &&
-          sel.process.head.shouldIn.isEmpty &&
-          sel.process.head.query.lengthCompare(1) == 0 &&
-          sel.process.head.query.head.comb == graft.selector.Combinator.ChildrenAll &&
-          sel.process.head.query.head.simples.forall(nodeLocal) =>
-          out(i) = sel.process.head.query.head.simples.toArray
-        case _ => return null
-      }
-      i += 1
+  /** the general engine's find(selector) from the root, in document
+    * order; null for an invalid selector. */
+  private def findAll(doc: VDoc, selector: String): ArrayBuffer[Int] =
+    compiled(selector) match {
+      case Right(sel) => Engine.findSelector(doc, ArrayBuffer(0), sel)
+      case Left(_) => null
     }
-    out
-  }
 
   /** a selector's comma groups as flat compounds when every group is a
     * single-segment descendant predicate of non-positional simples
     * (matching is done on the intact tree, exactly like find): these
     * qualify for the fused one-pass tree walk instead of the general
     * engine. Null when any group needs the engine. */
-  private def simpleCompounds(sel: graft.selector.Selector): Array[Array[graft.selector.Simple]] =
-    if (sel.process.forall(p =>
-      p.shouldIn.isEmpty && p.query.lengthCompare(1) == 0 &&
-        p.query.head.comb == graft.selector.Combinator.ChildrenAll &&
-        !p.query.head.simples.exists(graft.query.Engine.isPositional)))
-      sel.process.iterator.map(_.query.head.simples.toArray).toArray
-    else null
-
-  private def stripCompounds(recipe: Recipe): Array[Array[graft.selector.Simple]] =
-    compiledCompounds(recipe.remove) // per-JVM cached (hot path: per row)
-
-  /** per-Recipe cache of (strip, candidate) fused-walk compounds:
-    * selectMain runs per ROW, and re-deriving the compound arrays there
-    * allocated per-row garbage for a value that is constant per recipe.
-    * The sentinel pairs a null slot for "needs the general engine". */
-  private val recipeCache =
-    new ConcurrentHashMap[Recipe, (Array[Array[graft.selector.Simple]], Array[Array[graft.selector.Simple]])]()
-
-  private def recipeCompounds(recipe: Recipe): (Array[Array[graft.selector.Simple]], Array[Array[graft.selector.Simple]]) = {
-    val hit = recipeCache.get(recipe)
-    if (hit != null) return hit
-    val computed = (stripCompounds(recipe), candidateCompounds(recipe))
-    if (recipeCache.size < SelectorCacheCap) recipeCache.putIfAbsent(recipe, computed)
-    computed
-  }
-
-  /** cached fused-walk compounds per selector string (null entries mean
-    * "needs the general engine"); same cap discipline as the selector
-    * cache. */
-  private val compoundCache =
-    new ConcurrentHashMap[String, Array[Array[graft.selector.Simple]]]()
-  private val NoCompounds = new Array[Array[graft.selector.Simple]](0)
-
-  private def compiledCompounds(selStr: String): Array[Array[graft.selector.Simple]] = {
-    val hit = compoundCache.get(selStr)
-    if (hit != null) return if (hit.length == 0) null else hit
-    val computed = compiled(selStr) match {
-      case Right(sel) => simpleCompounds(sel)
+  private def simpleCompounds(selStr: String): Array[Array[Simple]] =
+    compiled(selStr) match {
+      case Right(sel) if sel.process.forall(p =>
+        p.shouldIn.isEmpty && p.query.lengthCompare(1) == 0 &&
+          p.query.head.comb == graft.selector.Combinator.ChildrenAll &&
+          !p.query.head.simples.exists(Engine.isPositional)) =>
+        sel.process.iterator.map(_.query.head.simples.toArray).toArray
       case _ => null
     }
-    if (compoundCache.size < SelectorCacheCap)
-      compoundCache.putIfAbsent(selStr, if (computed == null) NoCompounds else computed)
-    computed
+
+  /** node-local simples (tag/class/id/attr): a candidate made of them can
+    * be tested mid-walk regardless of pending removals (`#id` is resolved
+    * by the walk itself, see [[FusedWalk]]). */
+  private def nodeLocal(s: Simple): Boolean = s match {
+    case Simple.All | _: Simple.Tag | _: Simple.Cls | _: Simple.Id | _: Simple.Attr => true
+    case _ => false
   }
 
-  @inline private def matchesCompound(doc: VDoc, c: Int,
-      simples: Array[graft.selector.Simple]): Boolean = {
-    var all = true
-    var si = 0
-    while (all && si < simples.length) {
-      all = graft.query.Engine.matchOne(doc, c, simples(si))
-      si += 1
+  /** one node-local compound per candidate selector, or null if any
+    * candidate needs the general engine. */
+  private def candidateCompounds(recipe: Recipe): Array[Array[Simple]] = {
+    val out = recipe.mainCandidates.map(simpleCompounds).toArray
+    if (out.forall(c => c != null && c.length == 1 && c(0).forall(nodeLocal))) out.map(_(0))
+    else null
+  }
+
+  /** fused-walk programs per recipe and per selector string, compiled once
+    * per JVM (selectMain and the extract_* entries run per ROW); the
+    * sentinel marks "needs the general engine". Same cap discipline as
+    * the selector cache. */
+  private val recipeCache = new ConcurrentHashMap[Recipe, FusedWalk.Program]()
+  private val programCache = new ConcurrentHashMap[String, FusedWalk.Program]()
+  private val NoProgram = FusedWalk.compile(Array.empty, Array.empty, strip = false)
+
+  private def cached[K](cache: ConcurrentHashMap[K, FusedWalk.Program], key: K)(
+      make: => FusedWalk.Program): FusedWalk.Program = {
+    var hit = cache.get(key)
+    if (hit == null) {
+      val made = make
+      hit = if (made == null) NoProgram else made
+      if (cache.size < SelectorCacheCap) cache.putIfAbsent(key, hit)
     }
-    all
+    if (hit eq NoProgram) null else hit
   }
 
-  @inline private def matchesAnyCompound(doc: VDoc, c: Int,
-      compounds: Array[Array[graft.selector.Simple]]): Boolean = {
-    var pi = 0
-    while (pi < compounds.length) {
-      if (matchesCompound(doc, c, compounds(pi))) return true
-      pi += 1
-    }
-    false
+  private def recipeProgram(recipe: Recipe): FusedWalk.Program = cached(recipeCache, recipe) {
+    val strip = simpleCompounds(recipe.remove)
+    val cands = candidateCompounds(recipe)
+    if (strip == null || cands == null) null else FusedWalk.compile(strip, cands, strip = true)
   }
 
-  /** pick the recipe's main-content element set after boilerplate removal;
-    * selectors come from the per-JVM parse cache.
+  private def selectorProgram(selStr: String): FusedWalk.Program = cached(programCache, selStr) {
+    val groups = simpleCompounds(selStr)
+    if (groups == null) null else FusedWalk.compile(groups, Array.empty, strip = false)
+  }
+
+  /** the recipe's main-content element after boilerplate removal (0, the
+    * root, when no candidate matches); selectors come from the per-JVM
+    * parse cache.
     *
     * Fast path (the default recipe shape): ONE fused tree pass does both
     * the strip match and the candidate match — a strip-matched element is
     * recorded for removal and its subtree is NOT entered (removing the
     * root detaches everything below, and candidates must not come from
     * stripped subtrees), which skips the bulk of a boilerplate-heavy page.
-    * Candidate simples are node-local (tag/class/id/attr), so evaluating
-    * them before the batched removal is indistinguishable from
-    * remove-then-find. Falls back to the general engine otherwise. */
-  private def selectMain(doc: VDoc, recipe: Recipe): Elems = {
-    val root = doc.rootElems
-    val (strip, cands) = recipeCompounds(recipe)
-    if (strip != null && cands != null) {
-      val a = doc.arena
-      val firstMatch = Array.fill(cands.length)(-1)
-      val toRemove = new scala.collection.mutable.ArrayBuffer[Int](8)
-      def rec(node: Int): Unit = {
-        var c = a.firstChild(node)
-        while (c >= 0) {
-          if (a.kind(c) == a.ELEM) {
-            if (matchesAnyCompound(doc, c, strip)) toRemove += c
-            else {
-              var i = 0
-              while (i < cands.length) {
-                if (firstMatch(i) < 0 && matchesCompound(doc, c, cands(i))) firstMatch(i) = c
-                i += 1
-              }
-              if (a.firstChild(c) >= 0) rec(c)
-            }
-          }
-          c = a.nextSib(c)
-        }
-      }
-      rec(0)
-      if (toRemove.nonEmpty) new Elems(doc, toRemove.toArray).remove()
+    * Candidate simples are node-local, and a candidate's `#id` is the
+    * first non-stripped element carrying it, so the result equals
+    * remove-then-find even when a stripped subtree holds a duplicate id.
+    * Falls back to the general engine otherwise. */
+  private def selectMain(doc: VDoc, recipe: Recipe): Int = {
+    val prog = recipeProgram(recipe)
+    if (prog != null) {
+      val w = FusedWalk.walk(doc, prog)
       var i = 0
-      while (i < firstMatch.length) {
-        if (firstMatch(i) >= 0) return new Elems(doc, Array(firstMatch(i)))
+      while (i < w.nHits) { doc.arena.detach(w.hits(i)); i += 1 }
+      i = 0
+      while (i < prog.cands.length) {
+        if (w.first(i) >= 0) return w.first(i)
         i += 1
       }
-      return root
+      return 0
     }
+    val root = doc.rootElems
     root.find(recipe.remove).remove()
-    var main: Elems = null
     val it = recipe.mainCandidates.iterator
-    while (main == null && it.hasNext) {
+    while (it.hasNext) {
       val found = root.find(it.next())
-      if (found.nonEmpty) main = found.first()
+      if (found.nonEmpty) return found.ids(0)
     }
-    if (main == null) root else main
+    0
   }
 
-  private def extractMainFrom(doc: VDoc, recipe: Recipe): String = {
-    if (doc == null) return null
-    selectMain(doc, recipe).text()
-  }
-
-  /** [[parseBytes]] under the CRAWL profile — see [[parseCrawl]]. */
-  def parseBytesCrawl(html: Array[Byte]): VDoc = parseBytesWith(html, ParseOptions.crawl)
+  private def extractMainFrom(doc: VDoc, recipe: Recipe): String =
+    if (doc == null) null else new Elems(doc, Array(selectMain(doc, recipe))).text()
 
   /** main-content extraction: remove boilerplate, pick the first matching
     * main-content candidate, return its text(). Null on parse failure. */
@@ -277,197 +207,131 @@ object Extractor extends Serializable {
   def extractText(html: String, selector: String): String = {
     val doc = parse(html)
     if (doc == null) return null
-    compiled(selector) match {
-      case Left(_) => null
-      case Right(sel) =>
-        import scala.collection.mutable.ArrayBuffer
-        val found = graft.query.Engine.findSelector(doc, ArrayBuffer(0), sel)
-        val sb = new java.lang.StringBuilder(64)
-        found.foreach(e => doc.arena.textContent(e, sb))
-        sb.toString
-    }
+    val found = findAll(doc, selector)
+    if (found == null) return null
+    val sb = new java.lang.StringBuilder(64)
+    found.foreach(e => doc.arena.textContent(e, sb))
+    sb.toString
   }
 
   /** static entry used from generated code (ExtractText.doGenCode).
     * Defensive like every BINARY entry: ANY per-row failure yields null —
     * the same bytes must have the same fate whether the column is STRING
     * or BINARY. */
-  def extractTextCodegen(html: org.apache.spark.unsafe.types.UTF8String,
-      selector: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String =
+  def extractTextCodegen(html: UTF8String, selector: UTF8String): UTF8String =
     if (html == null) null else extractTextCodegenBinary(html.getBytes, selector)
 
-  private val utf8Out = new ThreadLocal[graft.dom.Utf8Builder] {
-    override def initialValue(): graft.dom.Utf8Builder = new graft.dom.Utf8Builder()
+  private val utf8Out = new ThreadLocal[Utf8Builder] {
+    override def initialValue(): Utf8Builder = new Utf8Builder()
   }
 
   /** the output slab gets the same pin-guard as the arena: one rare giant
     * extracted text must not hold executor memory for the thread's
     * lifetime. */
-  private def outBuilder(): graft.dom.Utf8Builder = {
+  private def outBuilder(): Utf8Builder = {
     val b = utf8Out.get()
     if (b.buf.length > ArenaShrinkChars) {
-      val fresh = new graft.dom.Utf8Builder()
+      val fresh = new Utf8Builder()
       utf8Out.set(fresh)
       fresh
     } else b
   }
 
-  /** hot path: bytes in, UTF-8 bytes out — no UTF-16 String round trip.
-    * Defensive: ANY per-row failure (parse error, pathological input) yields
-    * null — a lineage `failure_count` increment, never a task failure. */
-  def extractMainCodegen(html: Array[Byte]): org.apache.spark.unsafe.types.UTF8String = {
-    if (html == null) return null
-    try {
-      val doc = parseBytes(html)
-      if (doc == null) return null
-      val main = selectMain(doc, Recipe.default)
-      val ub = outBuilder()
-      ub.reset()
-      main.ids.foreach(e => doc.arena.textContentUtf8(e, ub))
-      org.apache.spark.unsafe.types.UTF8String.fromBytes(ub.toBytes)
-    } catch {
-      case scala.util.control.NonFatal(_) => null
-      // belt over the parser's maxDepth=2048 cap: should a recursive walk
-      // ever overflow the task stack anyway, the row degrades to null
-      // after full unwind instead of failing the task (NonFatal does not
-      // match StackOverflowError)
-      case _: StackOverflowError => null
-    }
-  }
-
-  /** zero-copy variant of [[extractMainCodegen]]: wraps the thread-local
-    * builder slab directly (`UTF8String.fromBytes(buf, 0, len)`) instead of
-    * copying it out. The result is valid ONLY until this thread's next
-    * extraction resets the slab — safe for consumers that materialize
-    * immediately (UnsafeRowWriter projections copy the bytes into the row
-    * buffer before the next expression evaluates), UNSAFE for
-    * reference-retaining consumers (TypedImperativeAggregate results like
-    * collect_list hold expression outputs across rows). Measurement entry
-    * for the output-copy lever (BASELINE.md) — the shipped expressions use
-    * the copying path unless the measured win justifies the hazard. */
-  def extractMainCodegenView(html: Array[Byte]): org.apache.spark.unsafe.types.UTF8String = {
-    if (html == null) return null
-    try {
-      val doc = parseBytes(html)
-      if (doc == null) return null
-      val main = selectMain(doc, Recipe.default)
-      val ub = outBuilder()
-      ub.reset()
-      main.ids.foreach(e => doc.arena.textContentUtf8(e, ub))
-      org.apache.spark.unsafe.types.UTF8String.fromBytes(ub.buf, 0, ub.len)
-    } catch {
-      case scala.util.control.NonFatal(_) => null
-      case _: StackOverflowError => null // row degrades, task survives (see first belt note)
-    }
-  }
+  /** hot path: bytes in, UTF-8 bytes out — no UTF-16 String round trip. */
+  def extractMainCodegen(html: Array[Byte]): UTF8String =
+    extractMainUtf8(html, ParseOptions.compat)
 
   /** STRING entries delegate to the byte-native paths via the UTF8String's
     * underlying UTF-8 bytes: no UTF-16 round trip of the page, and STRING
     * and BINARY columns give the same bytes the same fate by construction
     * (the round-4 interpreted-vs-codegen unification, now structural). */
-  def extractMainCodegenStr(html: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String =
+  def extractMainCodegenStr(html: UTF8String): UTF8String =
     if (html == null) null else extractMainCodegen(html.getBytes)
 
   /** `extract_main_crawl` static entries: the SAME boilerplate-strip
     * recipe over the CRAWL parse profile — on fragment pages the implied
     * `body` gives the recipe's `body` candidate something to match, so
     * extraction returns main content instead of falling back to the whole
-    * root (titles and all). Defensive null-on-failure like every entry. */
-  def extractMainCrawlCodegen(html: Array[Byte]): org.apache.spark.unsafe.types.UTF8String = {
+    * root (titles and all). */
+  def extractMainCrawlCodegen(html: Array[Byte]): UTF8String =
+    extractMainUtf8(html, ParseOptions.crawl)
+
+  def extractMainCrawlCodegenStr(html: UTF8String): UTF8String =
+    if (html == null) null else extractMainCrawlCodegen(html.getBytes)
+
+  /** the default recipe's main text as UTF-8 under a parse profile.
+    * Defensive: ANY per-row failure (parse error, pathological input)
+    * yields null — a lineage `failure_count` increment, never a task
+    * failure. */
+  private def extractMainUtf8(html: Array[Byte], opts: ParseOptions): UTF8String = {
     if (html == null) return null
     try {
-      val doc = parseBytesCrawl(html)
+      val doc = parseBytesWith(html, opts)
       if (doc == null) return null
       val main = selectMain(doc, Recipe.default)
       val ub = outBuilder()
       ub.reset()
-      main.ids.foreach(e => doc.arena.textContentUtf8(e, ub))
-      org.apache.spark.unsafe.types.UTF8String.fromBytes(ub.toBytes)
+      doc.arena.textContentUtf8(main, ub)
+      UTF8String.fromBytes(ub.toBytes)
     } catch {
-      case scala.util.control.NonFatal(_) => null
-      case _: StackOverflowError => null // row degrades, task survives (see first belt note)
+      // belt over the parser's maxDepth=2048 cap: should a recursive walk
+      // ever overflow the task stack anyway, the row degrades to null
+      // after full unwind instead of failing the task (NonFatal does not
+      // match StackOverflowError)
+      case NonFatal(_) | _: StackOverflowError => null
     }
   }
-
-  def extractMainCrawlCodegenStr(html: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String =
-    if (html == null) null else extractMainCrawlCodegen(html.getBytes)
 
   /** byte-native hot path for BINARY input: UTF-8 in (parseBytes), UTF-8 out
     * (Utf8Builder) — no UTF-16 String round trip of the page, same as
     * extract_main's path. */
-  def extractTextCodegenBinary(html: Array[Byte],
-      selector: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
+  def extractTextCodegenBinary(html: Array[Byte], selector: UTF8String): UTF8String = {
     if (html == null || selector == null) return null
     try {
       val doc = parseBytes(html)
       if (doc == null) return null
       val selStr = selector.toString
-      val compounds = compiledCompounds(selStr)
+      val prog = selectorProgram(selStr)
       val ub = outBuilder()
       ub.reset()
-      if (compounds != null) {
+      if (prog != null) {
         // fused fast path: find()'s doc-order union-with-dedup over simple
         // comma groups IS one doc-order walk testing each element once
         // (nested matches included, exactly like the general engine)
-        val a = doc.arena
-        def rec(node: Int): Unit = {
-          var c = a.firstChild(node)
-          while (c >= 0) {
-            if (a.kind(c) == a.ELEM) {
-              if (matchesAnyCompound(doc, c, compounds)) a.textContentUtf8(c, ub)
-              rec(c)
-            }
-            c = a.nextSib(c)
-          }
-        }
-        rec(0)
-      } else compiled(selStr) match {
-        case Left(_) => return null
-        case Right(sel) =>
-          import scala.collection.mutable.ArrayBuffer
-          val found = graft.query.Engine.findSelector(doc, ArrayBuffer(0), sel)
-          found.foreach(e => doc.arena.textContentUtf8(e, ub))
+        val w = FusedWalk.walk(doc, prog)
+        var i = 0
+        while (i < w.nHits) { doc.arena.textContentUtf8(w.hits(i), ub); i += 1 }
+      } else {
+        val found = findAll(doc, selStr)
+        if (found == null) return null
+        found.foreach(e => doc.arena.textContentUtf8(e, ub))
       }
-      org.apache.spark.unsafe.types.UTF8String.fromBytes(ub.toBytes)
+      UTF8String.fromBytes(ub.toBytes)
     } catch {
-      case scala.util.control.NonFatal(_) => null
-      case _: StackOverflowError => null // row degrades, task survives (see first belt note)
+      case NonFatal(_) | _: StackOverflowError => null // row degrades, task survives (see first belt note)
     }
   }
 
   /** outerHtml() of every selector match in document order (the reference
     * flow find(sel) + outer_html, reference elements.rs render path). */
-  private def extractOuterHtmlFrom(doc: VDoc, selector: String): Array[String] =
-    compiled(selector) match {
-      case Left(_) => null
-      case Right(sel) =>
-        import scala.collection.mutable.ArrayBuffer
-        val found = graft.query.Engine.findSelector(doc, ArrayBuffer(0), sel)
-        val out = new Array[String](found.length)
-        var i = 0
-        while (i < found.length) {
-          out(i) = new graft.query.Elems(doc, Array(found(i))).outerHtml()
-          i += 1
-        }
-        out
-    }
+  private def extractOuterHtmlFrom(doc: VDoc, selector: String): Array[String] = {
+    val found = findAll(doc, selector)
+    if (found == null) null else found.map(e => new Elems(doc, Array(e)).outerHtml()).toArray
+  }
 
-  def extractOuterHtmlCodegen(html: org.apache.spark.unsafe.types.UTF8String,
-      sel: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData =
+  def extractOuterHtmlCodegen(html: UTF8String, sel: UTF8String): ArrayData =
     if (html == null) null else extractOuterHtmlCodegenBinary(html.getBytes, sel)
 
   /** byte-native BINARY path (parseBytes; only the matched snippets
     * materialize as Strings). */
-  def extractOuterHtmlCodegenBinary(html: Array[Byte],
-      sel: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def extractOuterHtmlCodegenBinary(html: Array[Byte], sel: UTF8String): ArrayData = {
     if (html == null || sel == null) return null
     try {
       val doc = parseBytes(html)
       if (doc == null) return null
       attrsToArrayData(extractOuterHtmlFrom(doc, sel.toString))
     } catch {
-      case scala.util.control.NonFatal(_) => null
-      case _: StackOverflowError => null // row degrades, task survives (see first belt note)
+      case NonFatal(_) | _: StackOverflowError => null // row degrades, task survives (see first belt note)
     }
   }
 
@@ -481,107 +345,65 @@ object Extractor extends Serializable {
     extractAttrsFrom(doc, selector, attrName)
   }
 
-  private def extractAttrsFrom(doc: VDoc, selector: String, attrName: String): Array[String] =
-    compiled(selector) match {
-      case Left(_) => null
-      case Right(sel) =>
-        import scala.collection.mutable.ArrayBuffer
-        val found = graft.query.Engine.findSelector(doc, ArrayBuffer(0), sel)
-        val out = new ArrayBuffer[String](found.length)
-        found.foreach { e =>
-          new graft.query.Elems(doc, Array(e)).attr(attrName).foreach(v => out += v.value)
-        }
-        out.toArray
-    }
+  private def extractAttrsFrom(doc: VDoc, selector: String, attrName: String): Array[String] = {
+    val found = findAll(doc, selector)
+    if (found == null) null
+    else found.flatMap(e => new Elems(doc, Array(e)).attr(attrName).map(_.value)).toArray
+  }
 
   /** codegen entries for extract_attrs / extract_count (static calls from
     * generated code; null propagates as SQL NULL). */
-  def extractAttrsCodegen(html: org.apache.spark.unsafe.types.UTF8String,
-      sel: org.apache.spark.unsafe.types.UTF8String,
-      attr: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData =
+  def extractAttrsCodegen(html: UTF8String, sel: UTF8String, attr: UTF8String): ArrayData =
     if (html == null) null else extractAttrsCodegenBinary(html.getBytes, sel, attr)
 
   /** byte-native BINARY path: the page parses straight from UTF-8 (no
     * UTF-16 inflation); only the small matched attr values materialize as
     * Strings. */
-  def extractAttrsCodegenBinary(html: Array[Byte],
-      sel: org.apache.spark.unsafe.types.UTF8String,
-      attr: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def extractAttrsCodegenBinary(html: Array[Byte], sel: UTF8String, attr: UTF8String): ArrayData = {
     if (html == null || sel == null || attr == null) return null
     try {
       val doc = parseBytes(html)
       if (doc == null) return null
       val selStr = sel.toString
       val attrName = attr.toString
-      val compounds = compiledCompounds(selStr)
-      if (compounds != null) {
-        // fused walk (same contract as extract_text: doc order, each node
-        // tested once); only matched elements' attr values materialize
-        val a = doc.arena
+      val prog = selectorProgram(selStr)
+      if (prog != null) {
+        // fused walk (same contract as extract_text); only matched
+        // elements' attr values materialize
+        val w = FusedWalk.walk(doc, prog)
         val out = new scala.collection.mutable.ArrayBuffer[String](8)
-        def rec(node: Int): Unit = {
-          var c = a.firstChild(node)
-          while (c >= 0) {
-            if (a.kind(c) == a.ELEM) {
-              if (matchesAnyCompound(doc, c, compounds))
-                new graft.query.Elems(doc, Array(c)).attr(attrName).foreach(v => out += v.value)
-              rec(c)
-            }
-            c = a.nextSib(c)
-          }
+        var i = 0
+        while (i < w.nHits) {
+          new Elems(doc, Array(w.hits(i))).attr(attrName).foreach(v => out += v.value)
+          i += 1
         }
-        rec(0)
         attrsToArrayData(out.toArray)
       } else attrsToArrayData(extractAttrsFrom(doc, selStr, attrName))
     } catch {
-      case scala.util.control.NonFatal(_) => null
-      case _: StackOverflowError => null // row degrades, task survives (see first belt note)
+      case NonFatal(_) | _: StackOverflowError => null // row degrades, task survives (see first belt note)
     }
   }
 
-  private def attrsToArrayData(out: Array[String]): org.apache.spark.sql.catalyst.util.ArrayData =
+  private def attrsToArrayData(out: Array[String]): ArrayData =
     if (out == null) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      out.map(v => org.apache.spark.unsafe.types.UTF8String.fromString(v).asInstanceOf[Any]))
+    else new GenericArrayData(
+      out.map(v => UTF8String.fromString(v).asInstanceOf[Any]))
 
-  def extractCountCodegen(html: org.apache.spark.unsafe.types.UTF8String,
-      sel: org.apache.spark.unsafe.types.UTF8String): java.lang.Long =
+  def extractCountCodegen(html: UTF8String, sel: UTF8String): java.lang.Long =
     if (html == null) null else extractCountCodegenBinary(html.getBytes, sel)
 
   /** byte-native BINARY path: parseBytes, never a page-sized String. */
-  def extractCountCodegenBinary(html: Array[Byte],
-      sel: org.apache.spark.unsafe.types.UTF8String): java.lang.Long = {
+  def extractCountCodegenBinary(html: Array[Byte], sel: UTF8String): java.lang.Long = {
     if (html == null || sel == null) return null
     try {
       val doc = parseBytes(html)
       if (doc == null) return null
       val selStr = sel.toString
-      val compounds = compiledCompounds(selStr)
-      if (compounds != null) {
-        val a = doc.arena
-        var count = 0L
-        def rec(node: Int): Unit = {
-          var c = a.firstChild(node)
-          while (c >= 0) {
-            if (a.kind(c) == a.ELEM) {
-              if (matchesAnyCompound(doc, c, compounds)) count += 1
-              rec(c)
-            }
-            c = a.nextSib(c)
-          }
-        }
-        rec(0)
-        java.lang.Long.valueOf(count)
-      } else compiled(selStr) match {
-        case Left(_) => null
-        case Right(s) =>
-          import scala.collection.mutable.ArrayBuffer
-          java.lang.Long.valueOf(
-            graft.query.Engine.findSelector(doc, ArrayBuffer(0), s).length.toLong)
-      }
+      val prog = selectorProgram(selStr)
+      if (prog != null) java.lang.Long.valueOf(FusedWalk.walk(doc, prog).nHits.toLong)
+      else extractCountFrom(doc, selStr)
     } catch {
-      case scala.util.control.NonFatal(_) => null
-      case _: StackOverflowError => null // row degrades, task survives (see first belt note)
+      case NonFatal(_) | _: StackOverflowError => null // row degrades, task survives (see first belt note)
     }
   }
 
@@ -589,14 +411,12 @@ object Extractor extends Serializable {
     * never emitted — null on parse/selector failure. */
   def extractCount(html: String, selector: String): java.lang.Long = {
     val doc = parse(html)
-    if (doc == null) return null
-    compiled(selector) match {
-      case Left(_) => null
-      case Right(sel) =>
-        import scala.collection.mutable.ArrayBuffer
-        java.lang.Long.valueOf(
-          graft.query.Engine.findSelector(doc, ArrayBuffer(0), sel).length.toLong)
-    }
+    if (doc == null) null else extractCountFrom(doc, selector)
+  }
+
+  private def extractCountFrom(doc: VDoc, selector: String): java.lang.Long = {
+    val found = findAll(doc, selector)
+    if (found == null) null else java.lang.Long.valueOf(found.length.toLong)
   }
 
   /** `extract_links(html, base_url)` static entries: every `a[href]` in
@@ -606,8 +426,7 @@ object Extractor extends Serializable {
     * `base_url` (HTML's document-base rule — one base per document,
     * first wins), else `base_url` itself. Unresolvable / unnormalizable
     * hrefs are skipped (crawl tolerance); parse failure yields null. */
-  def extractLinksCodegen(html: org.apache.spark.unsafe.types.UTF8String,
-      base: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData =
+  def extractLinksCodegen(html: UTF8String, base: UTF8String): ArrayData =
     if (html == null) null else extractLinksCodegenBinary(html.getBytes, base)
 
   /** the page's effective base URL: HTML's document-base rule — the
@@ -619,15 +438,14 @@ object Extractor extends Serializable {
     val baseHrefs = extractAttrsFrom(doc, "base[href]", "href")
     val b =
       if (baseHrefs != null && baseHrefs.nonEmpty)
-        UrlOps.resolve(pageUrl, graft.dom.Entities.decode(baseHrefs(0)))
+        UrlOps.resolve(pageUrl, Entities.decode(baseHrefs(0)))
       else null
     if (b != null) b else pageUrl
   }
 
   /** byte-native BINARY path: parseBytes, only hrefs materialize as
     * Strings. */
-  def extractLinksCodegenBinary(html: Array[Byte],
-      base: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def extractLinksCodegenBinary(html: Array[Byte], base: UTF8String): ArrayData = {
     if (html == null || base == null) return null
     try {
       val doc = parseBytes(html)
@@ -642,7 +460,7 @@ object Extractor extends Serializable {
       val out = new scala.collection.mutable.ArrayBuffer[String](hrefs.length)
       var i = 0
       while (i < hrefs.length) {
-        val r = UrlOps.resolveParsed(bSplit, graft.dom.Entities.decode(hrefs(i)))
+        val r = UrlOps.resolveParsed(bSplit, Entities.decode(hrefs(i)))
         if (r != null) {
           val n = UrlOps.normalize(r)
           if (n != null) out += n
@@ -651,8 +469,7 @@ object Extractor extends Serializable {
       }
       attrsToArrayData(out.toArray)
     } catch {
-      case scala.util.control.NonFatal(_) => null
-      case _: StackOverflowError => null // row degrades, task survives (see first belt note)
+      case NonFatal(_) | _: StackOverflowError => null // row degrades, task survives (see first belt note)
     }
   }
 
@@ -663,43 +480,35 @@ object Extractor extends Serializable {
     * exactly like [[extractLinksCodegenBinary]]; `text` is the anchor's
     * extracted text (the parity `text()`). Unresolvable hrefs are
     * skipped; parse failure yields null. */
-  def extractAnchorsCodegen(html: org.apache.spark.unsafe.types.UTF8String,
-      base: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData =
+  def extractAnchorsCodegen(html: UTF8String, base: UTF8String): ArrayData =
     if (html == null) null else extractAnchorsCodegenBinary(html.getBytes, base)
 
-  def extractAnchorsCodegenBinary(html: Array[Byte],
-      base: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def extractAnchorsCodegenBinary(html: Array[Byte], base: UTF8String): ArrayData = {
     if (html == null || base == null) return null
     try {
       val doc = parseBytes(html)
       if (doc == null) return null
       val effBase = effectiveBase(doc, base.toString)
       val bSplit = UrlOps.split(UrlOps.preClean(effBase))
-      compiled("a[href]") match {
-        case Left(_) => null
-        case Right(sel) =>
-          import scala.collection.mutable.ArrayBuffer
-          val found = graft.query.Engine.findSelector(doc, ArrayBuffer(0), sel)
-          val out = new ArrayBuffer[org.apache.spark.sql.catalyst.InternalRow](found.length)
-          found.foreach { e =>
-            val el = new graft.query.Elems(doc, Array(e))
-            el.attr("href").foreach { v =>
-              val r = UrlOps.resolveParsed(bSplit, graft.dom.Entities.decode(v.value))
-              if (r != null) {
-                val n = UrlOps.normalize(r)
-                if (n != null) out += new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-                  Array[Any](
-                    org.apache.spark.unsafe.types.UTF8String.fromString(n),
-                    org.apache.spark.unsafe.types.UTF8String.fromString(el.text())))
-              }
-            }
+      val found = findAll(doc, "a[href]")
+      val out = new ArrayBuffer[InternalRow](found.length)
+      found.foreach { e =>
+        val el = new Elems(doc, Array(e))
+        el.attr("href").foreach { v =>
+          val r = UrlOps.resolveParsed(bSplit, Entities.decode(v.value))
+          if (r != null) {
+            val n = UrlOps.normalize(r)
+            if (n != null) out += new GenericInternalRow(
+              Array[Any](
+                UTF8String.fromString(n),
+                UTF8String.fromString(el.text())))
           }
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            out.toArray[Any])
+        }
       }
+      new GenericArrayData(
+        out.toArray[Any])
     } catch {
-      case scala.util.control.NonFatal(_) => null
-      case _: StackOverflowError => null
+      case NonFatal(_) | _: StackOverflowError => null
     }
   }
 
@@ -707,53 +516,44 @@ object Extractor extends Serializable {
     * `link[rel~=canonical][href]` (rel is a case-insensitive token
     * list), resolved against the document base and normalized — the
     * dedup-cluster key a crawl keeps per page. Null when absent. */
-  def extractCanonicalCodegen(html: org.apache.spark.unsafe.types.UTF8String,
-      base: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String =
+  def extractCanonicalCodegen(html: UTF8String, base: UTF8String): UTF8String =
     if (html == null) null else extractCanonicalCodegenBinary(html.getBytes, base)
 
-  def extractCanonicalCodegenBinary(html: Array[Byte],
-      base: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
+  def extractCanonicalCodegenBinary(html: Array[Byte], base: UTF8String): UTF8String = {
     if (html == null || base == null) return null
     try {
       val doc = parseBytes(html)
       if (doc == null) return null
       val url = findRelUrl(doc, base.toString)
-      if (url == null) null else org.apache.spark.unsafe.types.UTF8String.fromString(url)
+      if (url == null) null else UTF8String.fromString(url)
     } catch {
-      case scala.util.control.NonFatal(_) => null
-      case _: StackOverflowError => null
+      case NonFatal(_) | _: StackOverflowError => null
     }
   }
 
   private def findRelUrl(doc: VDoc, pageUrl: String): String = {
-    val compiledSel = compiled("link[href]")
-    compiledSel match {
-      case Left(_) => null
-      case Right(sel) =>
-        import scala.collection.mutable.ArrayBuffer
-        val found = graft.query.Engine.findSelector(doc, ArrayBuffer(0), sel)
-        // one base[href] scan per DOCUMENT, not per candidate link
-        lazy val effBase = effectiveBase(doc, pageUrl)
-        var i = 0
-        while (i < found.length) {
-          val el = new graft.query.Elems(doc, Array(found(i)))
-          val rel = el.attr("rel")
-          // rel matches on the HTML-level (entity-decoded) value, like
-          // href — attr() itself stays raw-source
-          if (rel.isDefined && hasToken(graft.dom.Entities.decode(rel.get.value), "canonical")) {
-            val href = el.attr("href")
-            if (href.isDefined) {
-              val r = UrlOps.resolve(effBase, graft.dom.Entities.decode(href.get.value))
-              if (r != null) {
-                val n = UrlOps.normalize(r)
-                if (n != null) return n
-              }
-            }
+    val found = findAll(doc, "link[href]")
+    // one base[href] scan per DOCUMENT, not per candidate link
+    lazy val effBase = effectiveBase(doc, pageUrl)
+    var i = 0
+    while (i < found.length) {
+      val el = new Elems(doc, Array(found(i)))
+      val rel = el.attr("rel")
+      // rel matches on the HTML-level (entity-decoded) value, like
+      // href — attr() itself stays raw-source
+      if (rel.isDefined && hasToken(Entities.decode(rel.get.value), "canonical")) {
+        val href = el.attr("href")
+        if (href.isDefined) {
+          val r = UrlOps.resolve(effBase, Entities.decode(href.get.value))
+          if (r != null) {
+            val n = UrlOps.normalize(r)
+            if (n != null) return n
           }
-          i += 1
         }
-        null
+      }
+      i += 1
     }
+    null
   }
 
   /** case-insensitive membership in an HTML space-separated token list
@@ -777,53 +577,45 @@ object Extractor extends Serializable {
     * `delay [;,] [url=] TARGET`, quotes optional, all case-insensitive),
     * resolved + normalized. Null when absent or the refresh has no URL
     * part (self-refresh). */
-  def extractRefreshCodegen(html: org.apache.spark.unsafe.types.UTF8String,
-      base: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String =
+  def extractRefreshCodegen(html: UTF8String, base: UTF8String): UTF8String =
     if (html == null) null else extractRefreshCodegenBinary(html.getBytes, base)
 
-  def extractRefreshCodegenBinary(html: Array[Byte],
-      base: org.apache.spark.unsafe.types.UTF8String): org.apache.spark.unsafe.types.UTF8String = {
+  def extractRefreshCodegenBinary(html: Array[Byte], base: UTF8String): UTF8String = {
     if (html == null || base == null) return null
     try {
       val doc = parseBytes(html)
       if (doc == null) return null
       val url = findRefreshUrl(doc, base.toString)
-      if (url == null) null else org.apache.spark.unsafe.types.UTF8String.fromString(url)
+      if (url == null) null else UTF8String.fromString(url)
     } catch {
-      case scala.util.control.NonFatal(_) => null
-      case _: StackOverflowError => null
+      case NonFatal(_) | _: StackOverflowError => null
     }
   }
 
   private def findRefreshUrl(doc: VDoc, pageUrl: String): String = {
-    compiled("meta[http-equiv][content]") match {
-      case Left(_) => null
-      case Right(sel) =>
-        import scala.collection.mutable.ArrayBuffer
-        val found = graft.query.Engine.findSelector(doc, ArrayBuffer(0), sel)
-        lazy val effBase = effectiveBase(doc, pageUrl)
-        var i = 0
-        while (i < found.length) {
-          val el = new graft.query.Elems(doc, Array(found(i)))
-          val he = el.attr("http-equiv")
-          if (he.isDefined &&
-            graft.dom.Entities.decode(he.get.value).equalsIgnoreCase("refresh")) {
-            val content = el.attr("content")
-            if (content.isDefined) {
-              val target = parseRefreshContent(graft.dom.Entities.decode(content.get.value))
-              if (target != null) {
-                val r = UrlOps.resolve(effBase, target)
-                if (r != null) {
-                  val n = UrlOps.normalize(r)
-                  if (n != null) return n
-                }
-              }
+    val found = findAll(doc, "meta[http-equiv][content]")
+    lazy val effBase = effectiveBase(doc, pageUrl)
+    var i = 0
+    while (i < found.length) {
+      val el = new Elems(doc, Array(found(i)))
+      val he = el.attr("http-equiv")
+      if (he.isDefined &&
+        Entities.decode(he.get.value).equalsIgnoreCase("refresh")) {
+        val content = el.attr("content")
+        if (content.isDefined) {
+          val target = parseRefreshContent(Entities.decode(content.get.value))
+          if (target != null) {
+            val r = UrlOps.resolve(effBase, target)
+            if (r != null) {
+              val n = UrlOps.normalize(r)
+              if (n != null) return n
             }
           }
-          i += 1
         }
-        null
+      }
+      i += 1
     }
+    null
   }
 
   /** WHATWG shared-declarative-refresh steps: leading ws, REQUIRED delay

@@ -408,11 +408,18 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       "<ul><li>1</li><li class=\"a\">2<li>3</ul><div></div><div>x</div>",
       "<p>has x here</p><p>none</p><a href=\"/q\">l</a><span>s</span>",
       "<main>outer<main>nested</main></main>", // nested matches duplicate text
-      "<div class=\"a b\">ab</div><div class=\"b\">b</div>"
+      "<div class=\"a b\">ab</div><div class=\"b\">b</div>",
+      // duplicate ids: #id is the document's first holder on the intact tree
+      "<nav><div id=\"content\" class=\"a\">menu</div></nav><div id=\"content\">real</div><p id=\"x\">t</p>",
+      "<p id=\"content\">p</p><div id=\"content\" role=\"main\">d</div><div id>bool</div><div ID=\"x\">up</div>",
+      // mixed-case names and attribute keys
+      "<NAV>N</NAV><Main ROLE=\"main\">M<SCRIPT>s()</SCRIPT></Main><navs>ns</navs><DIV HIDDEN>h</DIV>"
     )
     // qualifying selectors (single-segment comma groups, non-positional)
     val fused = Seq("main,article,body", "li", ".a,.b", "div:empty",
-      "p:contains('x')", "a[href]", ":not(span)", "main")
+      "p:contains('x')", "a[href]", ":not(span)", "main",
+      "#content", "div#content", "#content,nav", "#x,#content.a", "NAV,Script",
+      "[role=main]", "[ROLE='main'],[hidden]", "[id='']", "div[id]")
     // engine-only selectors (combinators / positional) must fall back
     val general = Seq("div b", "ul > li", "li:first-child", "p + p")
     for (html <- pages; sel <- fused ++ general) {
